@@ -10,6 +10,16 @@ Fixed pipeline order (transform.go:148-161): normalize type → normalize unit
 → normalize magnitude → derive severity → extract office → parse location →
 time bucket → processed-at. `enrich()` composes them in exactly that order.
 
+The 8 KB rule: the fused stage is only fast if HotSpot JIT-compiles its
+generated methods, and HotSpot never compiles a method over 8,000 bytes of
+bytecode (HugeMethodLimit) — such a method runs every row in the
+interpreter. So no expression may be generated twice: shared
+intermediates are staged once as columns (see enrich_raw), and a builder
+picks its input before parsing it rather than carrying one parse chain per
+branch. Check: ``maxMethodCodeSize`` of every stage in
+``debug.package$.MODULE$.codegenStringSeq(executedPlan)`` stays below 8000
+(tests/test_enrich.py::test_etl_codegen_methods_fit_the_jit).
+
 Sentinels: invalid type/unit/office → '' (not NULL); severity / distance /
 direction → NULL; zero time → NULL timestamp.
 
@@ -31,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storm_data_etl_spark.schema import RAW_SCHEMA
+from storm_data_etl_spark.session import per_context
 
 ColumnOrName = Column | str
 
@@ -62,19 +73,24 @@ def parse_float_or_zero(col: ColumnOrName) -> Column:
     return F.coalesce(F.trim(_c(col)).try_cast("double"), F.lit(0.0))
 
 
-def _parse_magnitude_string(raw: Column) -> Column:
-    """trim; ''/'UNK' (case-insens.)→0; strip one EF/F prefix; parse-or-0.
+def _parse_trimmed_magnitude(t: Column) -> Column:
+    """''/'UNK' (case-insens.)→0; strip one EF/F prefix; parse-or-0.
 
     transform.go:78-89. Go strips TrimPrefix("EF") then TrimPrefix("F"):
     "EF2"→"2" (the second trim sees "2", no F), "F3"→"3", "FF3"→"F3"→parse
-    fail→0. The regex ^(EF|F) with a single replacement is equivalent.
+    fail→0. The regex ^(EF|F) with a single replacement is equivalent. A
+    NULL input (no source field for the type) also yields 0.
     """
-    t = F.trim(raw)
     stripped = F.regexp_replace(t, r"^(EF|F)", "")
     return (
         F.when((t == "") | (F.upper(t) == "UNK"), F.lit(0.0))
         .otherwise(F.coalesce(stripped.try_cast("double"), F.lit(0.0)))
     )
+
+
+def _magnitude_source(et: Column, size: Column, f_scale: Column, speed: Column) -> Column:
+    """The raw field the type's magnitude comes from; NULL for other types."""
+    return F.when(et == "hail", size).when(et == "tornado", f_scale).when(et == "wind", speed)
 
 
 def magnitude_raw(
@@ -86,15 +102,41 @@ def magnitude_raw(
     """Type-dispatched raw magnitude (transform.go:65-90).
 
     hail→Size, tornado→F_Scale, wind→Speed, other→0. Dispatch is on the RAW
-    (pre-normalization) event type, exact match.
+    (pre-normalization) event type, exact match. The source field is picked
+    first and parsed once, so the plan carries one parse chain, not three.
     """
-    et = _c(event_type)
-    return (
-        F.when(et == "hail", _parse_magnitude_string(_c(size)))
-        .when(et == "tornado", _parse_magnitude_string(_c(f_scale)))
-        .when(et == "wind", _parse_magnitude_string(_c(speed)))
-        .otherwise(F.lit(0.0))
-    )
+    src = _magnitude_source(_c(event_type), _c(size), _c(f_scale), _c(speed))
+    return _parse_trimmed_magnitude(F.trim(src))
+
+
+def _pad_hhmm(t: Column) -> Column:
+    """Trimmed HHMM → 4+ chars: a 3-char string gets a leading zero."""
+    return F.when(F.length(t) == 3, F.concat(F.lit("0"), t)).otherwise(t)
+
+
+def _hhmm_hour(padded: Column) -> Column:
+    return F.substring(padded, 1, 2).try_cast("int")
+
+
+def _hhmm_minute(padded: Column) -> Column:
+    return F.substr(padded, F.lit(3)).try_cast("int")
+
+
+def _hhmm_on_date(ts: Column, t: Column, hour: Column, minute: Column) -> Column:
+    """HH:MM of trimmed string ``t`` on ``ts``'s date; invalid → ``ts``."""
+    valid = t.rlike(r"^\d{3,}$") & (hour <= 23) & (minute.isNotNull()) & (minute <= 59)
+    return F.when(
+        valid,
+        F.make_timestamp(
+            F.year(ts), F.month(ts), F.dayofmonth(ts), hour, minute, F.lit(0)
+        ),
+    ).otherwise(ts)
+
+
+def _event_time_of(ts: Column, t: Column, hhmm_time: Column) -> Column:
+    """'' → ``ts``; strict RFC-3339 parse of trimmed ``t``; else ``hhmm_time``."""
+    rfc = F.when(t.rlike(RFC3339_RE), t.try_cast("timestamp"))
+    return F.when(t == "", ts).otherwise(F.coalesce(rfc, hhmm_time))
 
 
 def parse_hhmm(base_ts: ColumnOrName, hhmm: ColumnOrName) -> Column:
@@ -110,18 +152,9 @@ def parse_hhmm(base_ts: ColumnOrName, hhmm: ColumnOrName) -> Column:
     accepts a leading sign inside the slices ("+100" → 01:00) — kept out
     of scope like the other sign cases (see module notes).
     """
-    ts = _c(base_ts)
     t = F.trim(_c(hhmm))
-    padded = F.when(F.length(t) == 3, F.concat(F.lit("0"), t)).otherwise(t)
-    hour = F.substring(padded, 1, 2).try_cast("int")
-    minute = F.substr(padded, F.lit(3)).try_cast("int")
-    valid = t.rlike(r"^\d{3,}$") & (hour <= 23) & (minute.isNotNull()) & (minute <= 59)
-    return F.when(
-        valid,
-        F.make_timestamp(
-            F.year(ts), F.month(ts), F.dayofmonth(ts), hour, minute, F.lit(0)
-        ),
-    ).otherwise(ts)
+    padded = _pad_hhmm(t)
+    return _hhmm_on_date(_c(base_ts), t, _hhmm_hour(padded), _hhmm_minute(padded))
 
 
 def event_time(base_ts: ColumnOrName, time_str: ColumnOrName) -> Column:
@@ -133,11 +166,7 @@ def event_time(base_ts: ColumnOrName, time_str: ColumnOrName) -> Column:
     """
     ts = _c(base_ts)
     t = F.trim(_c(time_str))
-    rfc = F.when(t.rlike(RFC3339_RE), t.try_cast("timestamp"))
-    return (
-        F.when(t == "", ts)
-        .otherwise(F.coalesce(rfc, parse_hhmm(ts, t)))
-    )
+    return _event_time_of(ts, t, parse_hhmm(ts, t))
 
 
 def fmt_g(col: ColumnOrName) -> Column:
@@ -185,7 +214,9 @@ def event_id(
         fmt_g(magnitude),
     )
     short = F.substring(F.sha2(payload, 256), 1, 16)
-    return F.when(et == "", short).otherwise(F.concat(et, F.lit("-"), short))
+    # one hash chain: the type only picks the prefix
+    prefix = F.when(et == "", F.lit("")).otherwise(F.concat(et, F.lit("-")))
+    return F.concat(prefix, short)
 
 
 def normalize_event_type(col: ColumnOrName) -> Column:
@@ -265,8 +296,16 @@ def extract_source_office(comments: ColumnOrName) -> Column:
     return F.regexp_extract(F.trim(_c(comments)), SOURCE_OFFICE_RE, 1)
 
 
-def _location_match(raw_trimmed: Column) -> Column:
-    return raw_trimmed.rlike(LOCATION_RE)
+def _location_name(t: Column, matched: Column) -> Column:
+    return F.when(matched, F.trim(F.regexp_extract(t, LOCATION_RE, 3))).otherwise(t)
+
+
+def _location_distance(t: Column, matched: Column) -> Column:
+    return F.when(matched, F.regexp_extract(t, LOCATION_RE, 1).cast("double"))
+
+
+def _location_direction(t: Column, matched: Column) -> Column:
+    return F.when(matched, F.regexp_extract(t, LOCATION_RE, 2))
 
 
 def parse_location_name(raw: ColumnOrName) -> Column:
@@ -276,26 +315,20 @@ def parse_location_name(raw: ColumnOrName) -> Column:
     trimmed so group 3 has no trailing spaces, but we mirror with trim().
     """
     t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.trim(F.regexp_extract(t, LOCATION_RE, 3))
-    ).otherwise(t)
+    return _location_name(t, t.rlike(LOCATION_RE))
 
 
 def parse_location_distance(raw: ColumnOrName) -> Column:
     """Parsed distance (miles) or NULL. Group 1 is ^\\d+(\\.\\d+)? so the
     float parse cannot fail — NULL iff the pattern doesn't match."""
     t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.regexp_extract(t, LOCATION_RE, 1).cast("double")
-    ).otherwise(F.lit(None).cast("double"))
+    return _location_distance(t, t.rlike(LOCATION_RE))
 
 
 def parse_location_direction(raw: ColumnOrName) -> Column:
     """Parsed compass direction or NULL."""
     t = F.trim(_c(raw))
-    return F.when(
-        _location_match(t), F.regexp_extract(t, LOCATION_RE, 2)
-    ).otherwise(F.lit(None).cast("string"))
+    return _location_direction(t, t.rlike(LOCATION_RE))
 
 
 def time_bucket(event_time_col: ColumnOrName) -> Column:
@@ -304,19 +337,44 @@ def time_bucket(event_time_col: ColumnOrName) -> Column:
     return F.date_trunc("hour", _c(event_time_col))
 
 
+#: RAW_SCHEMA plus the PERMISSIVE parse's corrupt-record column.
+_PARSE_SCHEMA = T.StructType(
+    [*RAW_SCHEMA.fields, T.StructField("_corrupt", T.StringType())]
+)
+
+
+def _parse_json(value: Column) -> Column:
+    return F.from_json(
+        value.cast("string"),
+        _PARSE_SCHEMA,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
+    )
+
+
+def _parsed_ok(parsed: Column) -> Column:
+    return parsed.isNotNull() & parsed["_corrupt"].isNull()
+
+
+@per_context
 def json_valid(value_col: ColumnOrName = "value") -> Column:
     """Predicate: the envelope value parses as a RAW_SCHEMA JSON object.
     Applied to the raw envelope it selects the poison-pill rows' complement
     without materializing the parse twice (Catalyst dedups the from_json)."""
-    parse_schema = T.StructType(
-        [*RAW_SCHEMA.fields, T.StructField("_corrupt", T.StringType())]
-    )
-    parsed = F.from_json(
-        _c(value_col).cast("string"),
-        parse_schema,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    return parsed.isNotNull() & parsed["_corrupt"].isNull()
+    return _parsed_ok(_parse_json(_c(value_col)))
+
+
+@per_context
+def _parse_columns(value_col: str, ts_col: str) -> tuple[Column, list[Column]]:
+    """(the parsed struct column, parse_raw_events' output columns)."""
+    raw_cols = [
+        F.coalesce(F.col(f"parsed.{f.name}"), F.lit("")).alias(f.name)
+        for f in RAW_SCHEMA.fields
+    ]
+    return _parse_json(F.col(value_col)), [
+        _parsed_ok(F.col("parsed")).alias("_valid"),
+        F.col(ts_col).alias("_base_ts"),
+        *raw_cols,
+    ]
 
 
 def parse_raw_events(df: DataFrame, value_col: str = "value", ts_col: str = "timestamp") -> DataFrame:
@@ -333,25 +391,89 @@ def parse_raw_events(df: DataFrame, value_col: str = "value", ts_col: str = "tim
     from_json yields NULL (not '') for missing/null string fields, while Go
     unmarshals into zero-value "" — so every raw field is coalesced to ''.
     """
-    parse_schema = T.StructType(
-        [*RAW_SCHEMA.fields, T.StructField("_corrupt", T.StringType())]
-    )
-    parsed = F.from_json(
-        F.col(value_col).cast("string"),
-        parse_schema,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-    )
-    out = df.withColumn("parsed", parsed)
-    raw_cols = [
-        F.coalesce(F.col(f"parsed.{f.name}"), F.lit("")).alias(f.name)
-        for f in RAW_SCHEMA.fields
+    parsed, cols = _parse_columns(value_col, ts_col)
+    return df.withColumn("parsed", parsed).select(*cols)
+
+
+@per_context
+def _enrich_plan(
+    processed_at: str | None, base_ts_col: str
+) -> tuple[list[dict[str, Column]], list[Column]]:
+    """enrich_raw's column stages and final select list.
+
+    Each intermediate is computed once in its own stage and read by name
+    after it, so no expression's code is generated twice. A stage stays a
+    separate Project (CollapseProject keeps it) because its consumers read
+    each non-trivial alias more than once.
+    """
+    col = F.col
+    ts = col(base_ts_col)
+    stages = [
+        {
+            "_lat": parse_float_or_zero("Lat"),
+            "_lon": parse_float_or_zero("Lon"),
+            "_mag_t": F.trim(
+                _magnitude_source(
+                    col("EventType"), col("Size"), col("F_Scale"), col("Speed")
+                )
+            ),
+            "_et_norm": normalize_event_type("EventType"),
+            "_time_t": F.trim(col("Time")),
+            # location parse staging: one trim + one regex-match per row;
+            # the three field extracts branch on the staged flag
+            "_loc_t": F.trim(col("Location")),
+        },
+        {
+            "_raw_mag": _parse_trimmed_magnitude(col("_mag_t")),
+            "_hhmm": _pad_hhmm(col("_time_t")),
+            "_loc_m": col("_loc_t").rlike(LOCATION_RE),
+            # Raw input had no unit field — unit derives purely from
+            # normalized type.
+            "_unit": normalize_unit("_et_norm", F.lit("")),
+        },
+        {
+            "_hour": _hhmm_hour(col("_hhmm")),
+            "_minute": _hhmm_minute(col("_hhmm")),
+            "_mag": normalize_magnitude("_et_norm", "_raw_mag", "_unit"),
+        },
+        {
+            "_etime": _event_time_of(
+                ts,
+                col("_time_t"),
+                _hhmm_on_date(ts, col("_time_t"), col("_hour"), col("_minute")),
+            ),
+        },
     ]
-    valid = F.col("parsed").isNotNull() & F.col("parsed._corrupt").isNull()
-    return out.select(
-        valid.alias("_valid"),
-        F.col(ts_col).alias("_base_ts"),
-        *raw_cols,
+    loc_t, loc_m = col("_loc_t"), col("_loc_m")
+    proc = (
+        F.lit(processed_at).cast("timestamp")
+        if processed_at is not None
+        else F.current_timestamp()
     )
+    out = [
+        event_id("EventType", "State", "_lat", "_lon", "Time", "_raw_mag").alias("id"),
+        col("_et_norm").alias("event_type"),
+        F.struct(col("_lat").alias("lat"), col("_lon").alias("lon")).alias("geo"),
+        F.struct(
+            col("_mag").alias("magnitude"),
+            col("_unit").alias("unit"),
+            derive_severity("_et_norm", "_mag").alias("severity"),
+        ).alias("measurement"),
+        col("_etime").alias("event_time"),
+        F.struct(
+            col("Location").alias("raw"),
+            _location_name(loc_t, loc_m).alias("name"),
+            _location_distance(loc_t, loc_m).alias("distance"),
+            _location_direction(loc_t, loc_m).alias("direction"),
+            col("State").alias("state"),
+            col("County").alias("county"),
+        ).alias("location"),
+        col("Comments").alias("comments"),
+        extract_source_office("Comments").alias("source_office"),
+        time_bucket("_etime").alias("time_bucket"),
+        proc.alias("processed_at"),
+    ]
+    return stages, out
 
 
 def enrich_raw(
@@ -366,18 +488,30 @@ def enrich_raw(
     nested EVENT_SCHEMA layout (transform.go:37-47,148-161).
 
     ``processed_at``: ISO timestamp string to freeze the clock (genmock
-    pattern, cmd/genmock/main.go:60-64); None → current_timestamp().
+    pattern, cmd/genmock/main.go:60-64); None → current_timestamp(), which
+    Spark evaluates once per query.
     Catalyst fuses all of this into a single WholeStageCodegen stage — no
     shuffle, no UDF, scales linearly with input splits.
 
-    The intermediates (raw magnitude, normalized type/unit/magnitude, event
-    time) are materialized as staged columns rather than inlined Column
-    trees. Inlining duplicates each when-chain into every consumer branch
-    (derive_severity alone would carry ~7 copies of the magnitude chain),
-    and codegen subexpression elimination does not reach into conditional
-    branches — measured 2.3× slower than this staged form at sf0.1.
-    CollapseProject keeps the stages intact because the aliases are
-    non-cheap and multi-referenced.
+    The intermediates (trimmed time, padded HHMM, hour, minute, raw
+    magnitude source and value, normalized type/unit/magnitude, event time,
+    location match) are materialized as staged columns rather than inlined
+    Column trees. Inlining duplicates each when-chain into every consumer
+    branch (derive_severity alone would carry ~7 copies of the magnitude
+    chain), and codegen subexpression elimination does not reach into
+    conditional branches — measured 2.3× slower than the staged form at
+    sf0.1.
+
+    The 8 KB rule: HotSpot never JIT-compiles a method over 8,000 bytes of
+    bytecode (HugeMethodLimit), so a larger generated method runs every row
+    in the interpreter. Keep every codegen stage of
+    ``serialize_events(enrich_raw(parse_raw_events(env)))`` under it;
+    tests/test_enrich.py checks ``maxMethodCodeSize`` of each stage via
+    ``org.apache.spark.sql.execution.debug.package$.MODULE$
+    .codegenStringSeq(df._jdf.queryExecution().executedPlan())``.
+
+    The stages and select list are built once per SparkContext and
+    argument pair (session.per_context) and reused on every DataFrame.
     """
     # All reference time math is UTC (transform.go:108-111,313): HHMM
     # expansion, RFC-3339 parse, and hourly buckets silently shift under a
@@ -385,64 +519,10 @@ def enrich_raw(
     # Pin it here so every caller — CLI, streaming, the driver's own
     # session — gets reference semantics.
     df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
-    staged = df.withColumns(
-        {
-            "_lat": parse_float_or_zero("Lat"),
-            "_lon": parse_float_or_zero("Lon"),
-            "_raw_mag": magnitude_raw("EventType", "Size", "F_Scale", "Speed"),
-            "_et_norm": normalize_event_type("EventType"),
-            "_etime": event_time(base_ts_col, "Time"),
-            # location parse staging: one trim + one regex-match per row;
-            # the three field extracts below branch on the staged flag
-            # instead of each re-running the match (6 regex evals → 4)
-            "_loc_t": F.trim(F.col("Location")),
-        }
-    )
-    staged = staged.withColumn("_loc_m", F.col("_loc_t").rlike(LOCATION_RE))
-    # Raw input had no unit field — unit derives purely from normalized type.
-    staged = staged.withColumn("_unit", normalize_unit("_et_norm", F.lit("")))
-    staged = staged.withColumn(
-        "_mag", normalize_magnitude("_et_norm", "_raw_mag", "_unit")
-    )
-    proc = (
-        F.lit(processed_at).cast("timestamp")
-        if processed_at is not None
-        else F.current_timestamp()
-    )
-
-    return staged.select(
-        event_id("EventType", "State", "_lat", "_lon", "Time", "_raw_mag").alias("id"),
-        F.col("_et_norm").alias("event_type"),
-        F.struct(F.col("_lat").alias("lat"), F.col("_lon").alias("lon")).alias("geo"),
-        F.struct(
-            F.col("_mag").alias("magnitude"),
-            F.col("_unit").alias("unit"),
-            derive_severity("_et_norm", "_mag").alias("severity"),
-        ).alias("measurement"),
-        F.col("_etime").alias("event_time"),
-        F.struct(
-            F.col("Location").alias("raw"),
-            F.when(
-                F.col("_loc_m"),
-                F.trim(F.regexp_extract(F.col("_loc_t"), LOCATION_RE, 3)),
-            )
-            .otherwise(F.col("_loc_t"))
-            .alias("name"),
-            F.when(
-                F.col("_loc_m"),
-                F.regexp_extract(F.col("_loc_t"), LOCATION_RE, 1).cast("double"),
-            ).alias("distance"),
-            F.when(
-                F.col("_loc_m"), F.regexp_extract(F.col("_loc_t"), LOCATION_RE, 2)
-            ).alias("direction"),
-            F.col("State").alias("state"),
-            F.col("County").alias("county"),
-        ).alias("location"),
-        F.col("Comments").alias("comments"),
-        extract_source_office("Comments").alias("source_office"),
-        time_bucket("_etime").alias("time_bucket"),
-        proc.alias("processed_at"),
-    )
+    stages, out = _enrich_plan(processed_at, base_ts_col)
+    for stage in stages:
+        df = df.withColumns(stage)
+    return df.select(*out)
 
 
 def enrich_envelope(

@@ -53,13 +53,6 @@ def punct_ratio(col: ColumnOrName) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct / n)
 
 
-def uppercase_ratio(col: ColumnOrName) -> Column:
-    c = _c(col)
-    n = F.length(c)
-    upper = F.regexp_count(c, F.lit(r"[A-Z]"))
-    return F.when(n == 0, F.lit(0.0)).otherwise(upper / n)
-
-
 def mean_word_length(col: ColumnOrName) -> Column:
     tk = tokens(col)
     n = F.size(tk)

@@ -11,8 +11,11 @@ via env for cluster deploys.
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
@@ -47,6 +50,45 @@ def release_pinned() -> int:
             pass
     _PINNED.clear()
     return n
+
+
+#: (SparkContext, {(builder, args, kwargs): Column tree}) — see per_context.
+_CONTEXT_COLUMNS: tuple = (None, {})
+_CONTEXT_LOCK = threading.RLock()
+
+
+def per_context(build):
+    """Memoize a fixed Column-tree builder per active SparkContext and its
+    scalar arguments.
+
+    A Column is an unresolved expression that binds at ``select`` time, so
+    one tree serves every DataFrame of the context; building it anew costs
+    one Py4J round trip per node (thousands for the ETL dataflow). Entries
+    are dropped when a new SparkContext replaces the one they were built
+    on. Unhashable arguments (Column inputs) bypass the cache. Builds run
+    under one lock, so each tree is built once even when threads race
+    (foreachBatch calls in on the Py4J callback thread).
+    """
+
+    @functools.wraps(build)
+    def cached(*args, **kwargs):
+        global _CONTEXT_COLUMNS
+        key = (build, args, tuple(sorted(kwargs.items())))
+        try:
+            hash(key)
+        except TypeError:
+            return build(*args, **kwargs)
+        sc = SparkContext._active_spark_context
+        with _CONTEXT_LOCK:
+            owner, entries = _CONTEXT_COLUMNS
+            if owner is not sc:
+                entries = {}
+                _CONTEXT_COLUMNS = (sc, entries)
+            if key not in entries:
+                entries[key] = build(*args, **kwargs)
+            return entries[key]
+
+    return cached
 
 
 def get_spark(

@@ -16,8 +16,10 @@ testable offline and is the part with semantics worth testing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from storm_data_etl_spark.session import per_context
 
 DEFAULT_BATCH_SIZE = 50  # reference BATCH_SIZE default (config.go:43-54)
 DEFAULT_FLUSH_INTERVAL = "500 milliseconds"  # BATCH_FLUSH_INTERVAL default
@@ -93,19 +95,8 @@ def read_kafka_stream(
     )
 
 
-def serialize_events(enriched: DataFrame, drop_zero_times: bool = True) -> DataFrame:
-    """S4: enriched events → Kafka message columns.
-
-    key = id bytes; value = StormEvent JSON (RawPayload excluded — it never
-    enters the enriched schema, matching its `json:"-"` tag); headers =
-    [event_type, processed_at RFC3339] (writer.go:55-68).
-
-    to_json drops NULL fields, matching Go omitempty for severity/distance/
-    direction and NULL time_bucket. (Divergence note: Go also omits
-    *zero-valued* omitempty fields — e.g. lat/lon 0.0 and '' strings stay
-    present here — and serializes zero time_bucket as 0001-01-01; both are
-    wire-format cosmetics with no query-surface impact.)
-    """
+@per_context
+def _serialized_columns() -> list[Column]:
     value = F.to_json(
         F.struct(
             "id",
@@ -132,11 +123,27 @@ def serialize_events(enriched: DataFrame, drop_zero_times: bool = True) -> DataF
             .alias("value"),
         ),
     )
-    return enriched.select(
+    return [
         F.col("id").cast("binary").alias("key"),
         value.cast("binary").alias("value"),
         headers.alias("headers"),
-    )
+    ]
+
+
+def serialize_events(enriched: DataFrame) -> DataFrame:
+    """S4: enriched events → Kafka message columns.
+
+    key = id bytes; value = StormEvent JSON (RawPayload excluded — it never
+    enters the enriched schema, matching its `json:"-"` tag); headers =
+    [event_type, processed_at RFC3339] (writer.go:55-68).
+
+    to_json drops NULL fields, matching Go omitempty for severity/distance/
+    direction and NULL time_bucket. (Divergence note: Go also omits
+    *zero-valued* omitempty fields — e.g. lat/lon 0.0 and '' strings stay
+    present here — and serializes zero time_bucket as 0001-01-01; both are
+    wire-format cosmetics with no query-surface impact.)
+    """
+    return enriched.select(*_serialized_columns())
 
 
 def write_kafka_batch(df: DataFrame, brokers: str, topic: str) -> None:

@@ -26,12 +26,28 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from storm_data_etl_spark.functions.enrich import enrich_raw, json_valid, parse_raw_events
+from storm_data_etl_spark.session import per_context
 from storm_data_etl_spark.sources.kafka import serialize_events
+
+
+@per_context
+def _envelope_columns(topic: str, timestamp: str) -> list[Column]:
+    return [
+        F.lit(None).cast("binary").alias("key"),
+        F.col("value").cast("binary").alias("value"),
+        F.lit(None).cast("array<struct<key:string,value:binary>>").alias("headers"),
+        F.lit(topic).alias("topic"),
+        F.lit(0).alias("partition"),
+        # any per-row long works as a surrogate offset; xxhash64 is
+        # streaming-safe (monotonically_increasing_id is rejected)
+        F.xxhash64("value").alias("offset"),
+        F.lit(timestamp).cast("timestamp").alias("timestamp"),
+    ]
 
 
 def text_stream_to_envelope(
@@ -44,17 +60,7 @@ def text_stream_to_envelope(
     pipeline runs broker-less — the single definition the streaming golden
     test and stream_bench both use (two hand-maintained copies of this
     select would silently diverge when the envelope contract changes)."""
-    return text_df.select(
-        F.lit(None).cast("binary").alias("key"),
-        F.col("value").cast("binary").alias("value"),
-        F.lit(None).cast("array<struct<key:string,value:binary>>").alias("headers"),
-        F.lit(topic).alias("topic"),
-        F.lit(0).alias("partition"),
-        # any per-row long works as a surrogate offset; xxhash64 is
-        # streaming-safe (monotonically_increasing_id is rejected)
-        F.xxhash64("value").alias("offset"),
-        F.lit(timestamp).cast("timestamp").alias("timestamp"),
-    )
+    return text_df.select(*_envelope_columns(topic, timestamp))
 
 
 def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -69,17 +75,6 @@ def split_poison(envelope: DataFrame) -> tuple[DataFrame, DataFrame]:
     good = parse_raw_events(envelope.filter(valid))
     dead = envelope.filter(~valid)
     return good, dead
-
-
-def enrich_stream(
-    envelope: DataFrame, processed_at: str | None = None
-) -> DataFrame:
-    """Streaming-safe enrichment plan: envelope → enriched events (good rows
-    only). Stateless narrow transform — no watermark or state store needed
-    (there are no streaming windows in the reference; time_bucket is a
-    per-row column, SURVEY §2.7)."""
-    parsed = parse_raw_events(envelope)
-    return enrich_raw(parsed.filter(F.col("_valid")), processed_at=processed_at)
 
 
 def run_pipeline(

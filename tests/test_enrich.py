@@ -8,8 +8,21 @@ behavioral parity, not copied code).
 from __future__ import annotations
 
 import datetime as dt
+import json
+import os
+import subprocess
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
+import pytest
+from pyspark.sql import functions as F
+
+from storm_data_etl_spark import session
 from storm_data_etl_spark.functions import enrich as E
+from storm_data_etl_spark.sources.kafka import serialize_events
+from storm_data_etl_spark.streaming.pipeline import split_poison, text_stream_to_envelope
 
 BASE = dt.datetime(2024, 4, 26, 0, 0, 0)
 
@@ -346,3 +359,194 @@ def test_enrich_with_observation_metrics(spark):
     got = obs.get
     assert got["produced"] == 2
     assert got["null_severity"] == 0
+
+
+# ------------------------------------------------ the ETL dataflow as built
+PROCESSED_AT = "2024-04-27 06:00:00"
+ETL_RECORDS = [
+    {"Time": "1510", "Size": "125", "F_Scale": "", "Speed": "",
+     "Location": "8 ESE Chappel", "County": "San Saba", "State": "TX",
+     "Lat": "31.02", "Lon": "-98.44", "Comments": "Hail. (SJT)",
+     "EventType": "hail"},
+    {"Time": "1245", "Size": "", "F_Scale": "", "Speed": "65",
+     "Location": "Tarrant spot", "County": "Tarrant", "State": "TX",
+     "Lat": "32.75", "Lon": "-97.33", "Comments": "Gusts. (FWD)",
+     "EventType": "wind"},
+    {"Time": "930", "Size": "", "F_Scale": "EF2", "Speed": "",
+     "Location": "2 N Mcalester", "County": "Pittsburg", "State": "OK",
+     "Lat": "34.93", "Lon": "-95.77", "Comments": "Tornado on the ground.",
+     "EventType": "tornado"},
+    {"Time": "2024-04-26T18:30:00Z", "Size": "1.75", "F_Scale": "",
+     "Speed": "", "Location": "Ravenna", "County": "Portage", "State": "OH",
+     "Lat": "41.16", "Lon": "-81.24", "Comments": "", "EventType": "flood"},
+]
+ETL_LINES = [json.dumps(r) for r in ETL_RECORDS] + ["not-json{{{"]
+
+
+@pytest.fixture(scope="module")
+def etl_path(tmp_path_factory) -> str:
+    path = tmp_path_factory.mktemp("etl") / "envelopes.txt"
+    path.write_text("".join(line + "\n" for line in ETL_LINES))
+    return str(path)
+
+
+def _etl_plan(text):
+    """(serialized good rows, dead-letter envelopes): the batch ETL plan
+    over a DataFrame of JSON-lines text."""
+    good, dead = split_poison(text_stream_to_envelope(text))
+    return serialize_events(E.enrich_raw(good, processed_at=PROCESSED_AT)), dead
+
+
+def _rows(df) -> list:
+    return sorted(tuple(r) for r in df.select("key", "value").collect())
+
+
+def test_etl_codegen_methods_fit_the_jit(spark, etl_path):
+    """Every generated method of the ETL stages stays under HotSpot's
+    8,000-byte HugeMethodLimit; over it, the JIT never compiles the hot
+    loop and every row runs in the bytecode interpreter."""
+    env = text_stream_to_envelope(spark.read.text(etl_path))
+    enriched = E.enrich_raw(E.parse_raw_events(env), processed_at=PROCESSED_AT)
+    debug_pkg = spark._jvm.org.apache.spark.sql.execution.debug
+    debug = getattr(getattr(debug_pkg, "package$"), "MODULE$")
+    for df in (enriched, serialize_events(enriched)):
+        stages = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+        sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
+        assert sizes and max(sizes) < 8000, sizes
+
+
+def test_column_cache_per_processed_at(spark, etl_path):
+    good, _ = split_poison(text_stream_to_envelope(spark.read.text(etl_path)))
+    stamps = {}
+    for at in (PROCESSED_AT, "2025-01-02 03:04:05"):
+        out = E.enrich_raw(good, processed_at=at)
+        fmt = F.date_format("processed_at", "yyyy-MM-dd HH:mm:ss")
+        stamps[at] = {r[0] for r in out.select(fmt).collect()}
+    assert stamps == {at: {at} for at in stamps}
+
+
+def test_column_cache_keeps_current_timestamp_per_query(spark, etl_path):
+    """processed_at=None reuses one current_timestamp() Column; Spark still
+    evaluates it once per query, so a later query reads a later clock."""
+    good, _ = split_poison(text_stream_to_envelope(spark.read.text(etl_path)))
+
+    def stamps():
+        out = E.enrich_raw(good).select(F.col("processed_at").cast("double"))
+        return {r[0] for r in out.collect()}
+
+    first = stamps()
+    time.sleep(0.05)
+    second = stamps()
+    assert len(first) == len(second) == 1
+    assert min(second) > max(first)
+    assert abs(max(second) - time.time()) < 600
+
+
+def test_second_plan_build_reuses_columns(spark, etl_path, monkeypatch):
+    """The fixed Column trees are built once per SparkContext: a second
+    build of the ETL plan sends at most a tenth of the first build's Py4J
+    commands. Release messages are not counted: Python's garbage collector
+    sends them whenever it frees objects of earlier tests."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    text = spark.read.text(etl_path)
+    monkeypatch.setattr(session, "_CONTEXT_COLUMNS", (None, {}))
+    sent = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += not command.startswith(release)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    counts = []
+    for _ in range(2):
+        sent[0] = 0
+        _etl_plan(text)
+        counts.append(sent[0])
+    assert counts[1] * 10 <= counts[0], counts
+
+
+def test_concurrent_plan_builds_agree(spark, etl_path, monkeypatch):
+    """Two threads building the plan from a cold cache and running it at
+    once (foreachBatch runs on the Py4J callback thread) get the rows a
+    serial run gets."""
+    expected = tuple(_rows(df) for df in _etl_plan(spark.read.text(etl_path)))
+    assert len(expected[0]) == 4 and len(expected[1]) == 1
+    monkeypatch.setattr(session, "_CONTEXT_COLUMNS", (None, {}))
+
+    def run(_):
+        return tuple(_rows(df) for df in _etl_plan(spark.read.text(etl_path)))
+
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(run, range(2), timeout=600))
+    assert got == [expected, expected]
+
+
+def test_column_cache_builds_once_under_thread_race(monkeypatch):
+    """Threads that miss the cache at once still run the builder once and
+    share its tree."""
+    monkeypatch.setattr(session, "_CONTEXT_COLUMNS", (None, {}))
+    calls = []
+
+    @session.per_context
+    def build(name):
+        calls.append(name)
+        time.sleep(0.001)
+        return object()
+
+    workers = 4 * (os.cpu_count() or 4)
+    start = threading.Barrier(workers, timeout=60)
+
+    def race(_):
+        start.wait()
+        return build("tree")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(workers) as pool:
+            got = list(pool.map(race, range(workers), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(calls) == 1 and all(g is got[0] for g in got)
+
+
+_RESTART_SCRIPT = """
+import sys
+from storm_data_etl_spark import session
+from storm_data_etl_spark.functions.enrich import enrich_raw
+from storm_data_etl_spark.sources.kafka import serialize_events
+from storm_data_etl_spark.streaming.pipeline import split_poison, text_stream_to_envelope
+
+def rows(spark):
+    good, _ = split_poison(text_stream_to_envelope(spark.read.text(sys.argv[1])))
+    ser = serialize_events(enrich_raw(good, processed_at="2024-04-27 06:00:00"))
+    return sorted((bytes(r.key), bytes(r.value)) for r in ser.collect())
+
+spark = session.get_spark("column-cache-restart", master="local[1]")
+before = rows(spark)
+spark.stop()
+spark = session.get_spark("column-cache-restart", master="local[1]")
+after = rows(spark)
+assert session._CONTEXT_COLUMNS[0] is spark.sparkContext
+assert before == after and len(before) == 4, (before, after)
+spark.stop()
+print("restart-ok")
+"""
+
+
+def test_column_cache_survives_context_restart(etl_path):
+    """Columns cached on a stopped SparkContext are not reused on the next
+    one. Runs in its own process: stopping the suite's shared session would
+    break the tests after this one."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, etl_path],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0 and "restart-ok" in proc.stdout, proc.stderr[-3000:]
